@@ -2,6 +2,8 @@ package graft.etl
 
 import java.nio.file.{Files, Paths}
 import java.time.Instant
+import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
@@ -15,6 +17,9 @@ import graft.util.Json
 object Load {
 
   val AllFormats: Seq[String] = Seq("csv", "json", "parquet", "sqlite", "xlsx")
+
+  /** Name prefix of the fan-out sink threads. */
+  private[etl] val SinkThreadPrefix = "graft-load-sink-"
 
   /** Resolve the reference's format choices (`core/load.py:79-94`), plus
     * two liberties the reference's own web form needs: `db` is accepted
@@ -36,11 +41,23 @@ object Load {
   /** Write `df` to every resolved format + the run manifest.
     *
     * The reference re-uses one materialized in-memory frame across sinks;
-    * Spark re-executes the plan per action, so the frame is persisted
-    * before the fan-out (top correctness pitfall with any nondeterministic
-    * source — SURVEY §4.2) and the manifest `count()` reuses the same
-    * cached data. MEMORY_AND_DISK: at cluster scale the fan-out input may
-    * exceed memory; spilling beats recompute.
+    * Spark re-executes the plan per action, so a multi-format frame is
+    * persisted before the fan-out (top correctness pitfall with any
+    * nondeterministic source — SURVEY §4.2) and the manifest `count()`
+    * fills that cache before any sink reads it. MEMORY_AND_DISK: at
+    * cluster scale the fan-out input may exceed memory; spilling beats
+    * recompute.
+    *
+    * The sinks then run concurrently, one thread each: a single-file
+    * write, the embedded-DB insert and the driver-side xlsx are each one
+    * task or one thread, so running them in turn leaves the other cores
+    * idle. Every sink writes its own path, and the threads inherit the
+    * caller's local properties (job group, scheduler pool). All sinks are
+    * waited for and the first failure, in format order, is rethrown with
+    * the rest suppressed — so when one sink fails the others may still
+    * have finished, whereas the reference stopped at the first failure.
+    * Unsupported formats are rejected before anything is written. A
+    * single format is written directly, with no cache.
     */
   def load(
       df: DataFrame,
@@ -56,22 +73,47 @@ object Load {
       return LoadResult(df.count(), df.columns.toSeq, None)
     }
 
-    val fanOut = formats.size > 1
+    val sinks: Seq[() => Unit] = formats.map {
+      case "csv"     => () => Writers.csv(df, out.path + ".csv", singleFile)
+      case "json"    => () => Writers.ndjson(df, out.path + ".json", singleFile)
+      case "parquet" => () => Writers.parquet(df, out.path + ".parquet", singleFile)
+      case "sqlite"  => () => Writers.jdbc(df, jdbcUrlFor(out.path))
+      case "xlsx"    => () => Writers.xlsx(df, out.path + ".xlsx")
+      case other =>
+        throw new IllegalArgumentException(s"Unsupported output format: $other")
+    }
+
+    val fanOut = sinks.size > 1
     if (fanOut) df.persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val rows = df.count()
-      formats.foreach {
-        case "csv"     => Writers.csv(df, out.path + ".csv", singleFile)
-        case "json"    => Writers.ndjson(df, out.path + ".json", singleFile)
-        case "parquet" => Writers.parquet(df, out.path + ".parquet", singleFile)
-        case "sqlite"  => Writers.jdbc(df, jdbcUrlFor(out.path))
-        case "xlsx"    => Writers.xlsx(df, out.path + ".xlsx")
-        case other =>
-          throw new IllegalArgumentException(s"Unsupported output format: $other")
-      }
+      if (fanOut) runConcurrently(sinks) else sinks.foreach(_())
       val manifest = writeManifest(df, config, rows, now())
       LoadResult(rows, df.columns.toSeq, Some(manifest))
     } finally if (fanOut) { df.unpersist(); () }
+  }
+
+  /** Runs every sink on its own thread of a per-call pool and returns
+    * once all have finished and the pool has terminated.
+    */
+  private def runConcurrently(sinks: Seq[() => Unit]): Unit = {
+    val n = new AtomicInteger()
+    val pool = Executors.newFixedThreadPool(sinks.size, (r: Runnable) =>
+      new Thread(r, SinkThreadPrefix + n.incrementAndGet()))
+    try {
+      val running = sinks.map(sink => pool.submit(new Callable[Unit] { def call(): Unit = sink() }))
+      val failures = running.flatMap { f =>
+        try { f.get(); None } catch { case e: ExecutionException => Some(e.getCause) }
+      }
+      failures.headOption.foreach { first =>
+        failures.tail.foreach(first.addSuppressed)
+        throw first
+      }
+    } finally {
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+      ()
+    }
   }
 
   /** W8 (`core/load.py:96-119`): JSON run manifest, always written. */

@@ -32,20 +32,19 @@ final class Pipeline(
   /** T-step: distinct pickup dates (A2 — a deliberate driver-side
     * materialization; ≤ 31 rows for generated data, bounded by the date
     * range not the data volume) feed the weather source, whose table
-    * broadcast-joins back (J1).
+    * broadcast-joins back (J1). The same collect decides emptiness — a
+    * blank pickup still collects as one null-date row — so no separate
+    * `isEmpty` job runs. Null dates request no weather; their rows get a
+    * null `Weather_Condition` through the left join.
     */
   def transform(df: DataFrame): DataFrame = {
-    val dates: Seq[LocalDate] =
-      if (df.isEmpty) Nil
-      else
-        df.select(to_date(col("Pickup_DateTime")).as("d"))
-          .distinct()
-          .collect()
-          .map(r => r.getDate(0).toLocalDate)
-          .toSeq
-          .sorted(Ordering.by[LocalDate, Long](_.toEpochDay))
-    val weatherDf = WeatherSource.toDF(spark, weather, dates)
-    Transform(weatherDf)(df)
+    val days = df.select(to_date(col("Pickup_DateTime"))).distinct().collect()
+    if (days.isEmpty) df // the reference's empty short-circuit (`core/transform.py:44-45`)
+    else {
+      val dates = days.toSeq.flatMap(r => Option(r.getDate(0))).map(_.toLocalDate)
+        .sorted(Ordering.by[LocalDate, Long](_.toEpochDay))
+      Transform.chain(WeatherSource.toDF(spark, weather, dates))(df)
+    }
   }
 
   /** Full run; returns (wall-clock seconds, load result) like the

@@ -60,21 +60,31 @@ object Transform {
     * (date: date, Hour: int, Weather_Condition: string) and is tiny
     * (≤ 24 rows per distinct date) — broadcast explicitly so the plan stays
     * shuffle-free at any left-side scale. No weather → typed null column
-    * (`core/transform.py:100-101`).
+    * (`core/transform.py:100-101`). Either way the input columns keep
+    * their order and `Weather_Condition` lands right after `Weekday`
+    * (the reference's column order, `core/transform.py:54-59`).
     */
-  def enrichWithWeather(weather: Option[DataFrame])(df: DataFrame): DataFrame =
-    weather match {
+  def enrichWithWeather(weather: Option[DataFrame])(df: DataFrame): DataFrame = {
+    // drop-then-add = overwrite semantics (like the reference's
+    // `with_columns`), so re-ingesting an already-enriched 13-column
+    // output doesn't yield an ambiguous duplicate column.
+    val base = df.drop("Weather_Condition")
+    val joined = weather match {
       case None =>
-        df.withColumn("Weather_Condition", lit(null).cast(StringType))
+        base.withColumn("Weather_Condition", lit(null).cast(StringType))
       case Some(w) =>
-        // drop-then-join = overwrite semantics (like the reference's
-        // `with_columns`), so re-ingesting an already-enriched 13-column
-        // output doesn't yield an ambiguous duplicate column.
-        df.drop("Weather_Condition")
-          .withColumn("date", to_date(col("Pickup_DateTime")))
+        // the USING join puts its keys first; the projection below
+        // restores the input order
+        base.withColumn("date", to_date(col("Pickup_DateTime")))
           .join(broadcast(w), Seq("date", "Hour"), "left")
-          .drop("date")
     }
+    val cols = base.columns.toSeq
+    val at = cols.indexOf("Weekday") + 1
+    val order =
+      if (at > 0) cols.take(at) ++ ("Weather_Condition" +: cols.drop(at))
+      else cols :+ "Weather_Condition"
+    joined.select(order.map(col): _*)
+  }
 
   /** P4-P6 (`core/transform.py:116-128`): duration in seconds → rounded
     * minutes + the `"MM.SS"` display string (minutes, a dot, zero-padded
@@ -141,15 +151,19 @@ object Transform {
                col("Theoretical_Time_Minutes") * 1.2, "Delayed")
           .otherwise("On-time"))
 
-  /** O2+O3 (`core/transform.py:31-65`): the fixed 4-stage chain; order is
-    * load-bearing (weather join needs Hour, status needs all predecessors).
-    * Empty input short-circuits like the reference (`:44-45`).
+  /** O2 (`core/transform.py:47-60`): the fixed 4-stage chain, unchecked;
+    * order is load-bearing (weather join needs Hour, status needs all
+    * predecessors). For callers that already know the input is non-empty.
+    */
+  def chain(weather: Option[DataFrame])(df: DataFrame): DataFrame =
+    df.transform(addTemporalFeatures)
+      .transform(enrichWithWeather(weather))
+      .transform(calculateDuration)
+      .transform(determineDelayStatus)
+
+  /** O2+O3 (`core/transform.py:31-65`): [[chain]] behind the reference's
+    * empty-input short-circuit (`:44-45`), which costs one job.
     */
   def apply(weather: Option[DataFrame])(df: DataFrame): DataFrame =
-    if (df.isEmpty) df
-    else
-      df.transform(addTemporalFeatures)
-        .transform(enrichWithWeather(weather))
-        .transform(calculateDuration)
-        .transform(determineDelayStatus)
+    if (df.isEmpty) df else chain(weather)(df)
 }

@@ -10,6 +10,11 @@ import org.apache.spark.sql.DataFrame
   * mirror the reference's artifact layout (right for ≤ a few GB); leave it
   * false at scale so every executor writes its own part — a 100 TB result
   * must never funnel through one task.
+  *
+  * Each sink writes only its own path, so [[graft.etl.Load.load]] runs
+  * them concurrently on one persisted frame. A failing sink therefore
+  * does not stop the others: they may still have finished when its error
+  * surfaces, whereas the reference stopped at the first failed sink.
   */
 object Writers {
 

@@ -122,6 +122,26 @@ class TransformSpec extends SparkSpec {
     assert(out.columns.length == 13)
   }
 
+  test("output keeps the reference column order for Stub and Disabled weather") {
+    val input = Seq(("SC1", Timestamp.valueOf("2024-01-01 08:30:00"),
+      Timestamp.valueOf("2024-01-01 09:00:00"), "Small", 5.0, "Urban"))
+      .toDF("Delivery_ID", "Pickup_DateTime", "Delivery_Timestamp",
+        "Package_Type", "Distance", "Delivery_Zone")
+    val reference = Seq(
+      "Delivery_ID", "Pickup_DateTime", "Delivery_Timestamp", "Package_Type",
+      "Distance", "Delivery_Zone", "Hour", "Weekday", "Weather_Condition",
+      "Actual_Delivery_Time_Minutes", "Actual_Delivery_Time_Display",
+      "Theoretical_Time_Minutes", "Status")
+    val day = Seq(java.time.LocalDate.of(2024, 1, 1))
+    Seq(new WeatherSource.Stub(), WeatherSource.Disabled).foreach { source =>
+      val weather = WeatherSource.toDF(spark, source, day)
+      val out = Transform(weather)(input)
+      assert(out.columns.toSeq == reference, source)
+      // re-ingesting the 13-column output keeps the order too
+      assert(Transform(weather)(out).columns.toSeq == reference, source)
+    }
+  }
+
   test("weather join: matched, unmatched and empty-input paths") {
     val df = Seq(
       ("SC1", Timestamp.valueOf("2024-01-01 08:30:00"), Timestamp.valueOf("2024-01-01 09:00:00")),
