@@ -57,7 +57,8 @@ object Load {
     * the rest suppressed — so when one sink fails the others may still
     * have finished, whereas the reference stopped at the first failure.
     * Unsupported formats are rejected before anything is written. A
-    * single format is written directly, with no cache.
+    * single format takes the same path on a one-thread pool, with no
+    * cache.
     */
   def load(
       df: DataFrame,
@@ -87,7 +88,7 @@ object Load {
     if (fanOut) df.persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val rows = df.count()
-      if (fanOut) runConcurrently(sinks) else sinks.foreach(_())
+      runConcurrently(sinks)
       val manifest = writeManifest(df, config, rows, now())
       LoadResult(rows, df.columns.toSeq, Some(manifest))
     } finally if (fanOut) { df.unpersist(); () }

@@ -120,6 +120,12 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  test("resolveFormats: all, all_but_xlsx, lists and the db alias") {
+    assert(Load.resolveFormats("all") == Load.AllFormats)
+    assert(Load.resolveFormats("all_but_xlsx") == Load.AllFormats.filterNot(_ == "xlsx"))
+    assert(Load.resolveFormats("csv, db,csv") == Seq("csv", "sqlite"))
+  }
+
   test("an unsupported format is rejected before any file is written") {
     withTempDir { dir =>
       val config = PipelineConfig(
