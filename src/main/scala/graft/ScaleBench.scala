@@ -59,6 +59,8 @@ import graft.operators.{Joins, Similarity, TextDedup}
   * events) via `SPARK_GRAFT_SCALE_MULTS` (default "5,10,20,40").
   */
 object ScaleBench {
+  import Bench.{drive, median}
+
   private val Vocab = 500000L   // cold-tail vocabulary → df grows with N
   private val HotVocab = 2000L  // Zipf-head proxy: 4% of draws land here
   private val Dim = 64
@@ -68,14 +70,6 @@ object ScaleBench {
   private val MinCos = 0.7
   private val DayMs = 24L * 3600 * 1000
   private val SpanMs = 30 * DayMs
-
-  private def drive(df: DataFrame): Unit =
-    df.write.format("noop").mode("overwrite").save()
-
-  private def median(xs: Seq[Double]): Double = {
-    val s = xs.sorted
-    if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-  }
 
   /** Synthetic shingle table: ~30-70 shingles/doc; 4% of draws come
     * from the 2k-entry hot head (df grows ~125× faster than the cold
@@ -184,16 +178,7 @@ object ScaleBench {
       .split(",").map(_.trim.toInt).toSeq
     val bruteCap = sys.env.getOrElse("SPARK_GRAFT_SCALE_BRUTE_CAP", "45000").toLong
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "1").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.get("graft-scale-bench")
     val planes = Similarity.planes(NPlanes, Dim)
     val tmp = java.nio.file.Files.createTempDirectory("graft_scale").toString
 

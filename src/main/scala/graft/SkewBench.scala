@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Joins, Windows}
@@ -17,29 +17,15 @@ import graft.operators.{Joins, Windows}
   * All columns derive from xxhash64(id) — deterministic, no rand().
   */
 object SkewBench {
+  import Bench.{drive, median}
+
   private val DayMs = 24L * 3600 * 1000
   private val SpanMs = 30 * DayMs // event times cover 30 days
-
-  private def drive(df: DataFrame): Unit =
-    df.write.format("noop").mode("overwrite").save()
-
-  private def median(xs: Seq[Double]): Double = {
-    val s = xs.sorted
-    if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-  }
 
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("SPARK_GRAFT_SKEW_ROWS", "1000000").toLong
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.get("graft-skew-bench")
 
     // 90% of rows on user_id 0, the rest uniform over 99 cold keys
     def skewKey(salt: Int): org.apache.spark.sql.Column =

@@ -153,17 +153,13 @@ object Transform {
 
   /** O2 (`core/transform.py:47-60`): the fixed 4-stage chain, unchecked;
     * order is load-bearing (weather join needs Hour, status needs all
-    * predecessors). For callers that already know the input is non-empty.
+    * predecessors). The reference's empty-input short-circuit (O3) lives
+    * in [[Pipeline.transform]], which learns emptiness from its date
+    * collect at no extra job.
     */
   def chain(weather: Option[DataFrame])(df: DataFrame): DataFrame =
     df.transform(addTemporalFeatures)
       .transform(enrichWithWeather(weather))
       .transform(calculateDuration)
       .transform(determineDelayStatus)
-
-  /** O2+O3 (`core/transform.py:31-65`): [[chain]] behind the reference's
-    * empty-input short-circuit (`:44-45`), which costs one job.
-    */
-  def apply(weather: Option[DataFrame])(df: DataFrame): DataFrame =
-    if (df.isEmpty) df else chain(weather)(df)
 }

@@ -33,10 +33,7 @@ object Checkpoints {
     * pressure point SER reads 47.9 s vs 59.5 s deserialized at the 8g
     * heap — compact pages defer eviction and spill cheaper.
     */
-  val RoundLevel: StorageLevel = sys.env.get("SPARK_GRAFT_ROUND_LEVEL") match {
-    case Some("deser") => StorageLevel.MEMORY_AND_DISK // A/B experiment seam
-    case _ => StorageLevel.MEMORY_AND_DISK_SER
-  }
+  val RoundLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK_SER
 
   /** `SPARK_GRAFT_RELIABLE_CHECKPOINT` routes round state to RELIABLE
     * `Dataset.checkpoint` against a checkpoint directory instead of

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.TimestampType
+import org.apache.spark.sql.types.{LongType, TimestampType}
 
 /** S2-S8 — file readers + extension dispatch + the datetime normalization
   * cast, mirroring `/root/reference/supercourier_etl/sources/readers.py` and
@@ -131,10 +131,16 @@ object Readers {
 
   /** S8 (`core/extract.py:77-80`): the normalization cast applied after
     * every extract path — makes CSV (string timestamps) and Parquet (native
-    * timestamps) sources equivalent.
+    * timestamps) sources equivalent. A `long` timestamp column is rejected:
+    * under `nanosAsLong` a TIMESTAMP(NANOS) parquet reads as epoch
+    * nanoseconds, which the cast would take for seconds.
     */
   def normalizeTimestamps(df: DataFrame): DataFrame =
     Seq("Pickup_DateTime", "Delivery_Timestamp").foldLeft(df) { (d, c) =>
-      if (d.columns.contains(c)) d.withColumn(c, col(c).cast(TimestampType)) else d
+      if (!d.columns.contains(c)) d
+      else if (d.schema(c).dataType == LongType)
+        throw new IllegalArgumentException(
+          s"$c is a long column (epoch units unknown); supply a timestamp or string")
+      else d.withColumn(c, col(c).cast(TimestampType))
     }
 }

@@ -61,7 +61,7 @@ class GeneratorSpec extends SparkSpec {
   }
 
   test("full pipeline over generated data keeps invariants (property)") {
-    val out = Transform(None)(Generator.deliveries(spark, 300, seed = 3L))
+    val out = Transform.chain(None)(Generator.deliveries(spark, 300, seed = 3L))
     val rows = out.select("Status", "Actual_Delivery_Time_Minutes",
       "Theoretical_Time_Minutes", "Actual_Delivery_Time_Display")
       .as[(String, Double, Double, String)].collect()

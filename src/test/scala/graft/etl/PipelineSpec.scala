@@ -94,6 +94,14 @@ class PipelineSpec extends SparkSpec {
 
   private def frame = Generator.deliveries(spark, 100, 11L)
 
+  test("transform short-circuits a 0-row input: same frame, 6 columns") {
+    val empty = frame.limit(0)
+    val config = PipelineConfig(SourceConfig.Generate(0), OutputConfig("unused", "csv"))
+    val out = new Pipeline(spark, config).transform(empty)
+    assert(out eq empty)
+    assert(out.columns.length == 6)
+  }
+
   private def sinkThreads: Seq[Thread] = {
     import scala.jdk.CollectionConverters._
     Thread.getAllStackTraces.keySet.asScala.toSeq

@@ -115,7 +115,7 @@ class TransformSpec extends SparkSpec {
       Timestamp.valueOf("2024-01-01 09:00:00"), 5.0, "Small", "Urban", "SC1"))
       .toDF("Pickup_DateTime", "Delivery_Timestamp", "Distance",
         "Package_Type", "Delivery_Zone", "Delivery_ID")
-    val out = Transform(None)(df)
+    val out = Transform.chain(None)(df)
     assert(out.schema("Weather_Condition").dataType ==
       org.apache.spark.sql.types.StringType)
     assert(out.select("Weather_Condition").head().isNullAt(0))
@@ -135,10 +135,10 @@ class TransformSpec extends SparkSpec {
     val day = Seq(java.time.LocalDate.of(2024, 1, 1))
     Seq(new WeatherSource.Stub(), WeatherSource.Disabled).foreach { source =>
       val weather = WeatherSource.toDF(spark, source, day)
-      val out = Transform(weather)(input)
+      val out = Transform.chain(weather)(input)
       assert(out.columns.toSeq == reference, source)
       // re-ingesting the 13-column output keeps the order too
-      assert(Transform(weather)(out).columns.toSeq == reference, source)
+      assert(Transform.chain(weather)(out).columns.toSeq == reference, source)
     }
   }
 
@@ -152,12 +152,12 @@ class TransformSpec extends SparkSpec {
       .withColumn("Delivery_Zone", lit("Urban"))
     val weather = Seq((java.sql.Date.valueOf("2024-01-01"), 8, "Light rain"))
       .toDF("date", "Hour", "Weather_Condition")
-    val out = Transform(Some(weather))(df)
+    val out = Transform.chain(Some(weather))(df)
       .select("Delivery_ID", "Weather_Condition").collect()
       .map(r => r.getString(0) -> Option(r.getString(1))).toMap
     assert(out == Map("SC1" -> Some("Light rain"), "SC2" -> None))
 
-    val empty = Transform(Some(weather))(df.limit(0))
+    val empty = Transform.chain(Some(weather))(df.limit(0))
     assert(empty.isEmpty)
   }
 }

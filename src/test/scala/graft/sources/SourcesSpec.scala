@@ -96,6 +96,15 @@ class SourcesSpec extends SparkSpec {
       "payload bytes must round-trip exactly")
   }
 
+  test("a parquet with a long Pickup_DateTime is rejected, not cast as seconds") {
+    // what a TIMESTAMP(NANOS) upload reads as under nanosAsLong
+    val p = tmp("nanos.parquet")
+    Writers.parquet(Seq(("SC1", 1735725600000000000L)).toDF("Delivery_ID", "Pickup_DateTime"), p)
+    val e = intercept[IllegalArgumentException](
+      Readers.normalizeTimestamps(Readers.read(spark, p)))
+    assert(e.getMessage.contains("Pickup_DateTime"), e.getMessage)
+  }
+
   test("dispatch: unknown extension raises") {
     intercept[IllegalArgumentException](Readers.read(spark, "/tmp/x.tsv"))
   }
