@@ -36,6 +36,8 @@ import graft.util.Json
   */
 object Bench {
   type Query = (SparkSession, String) => DataFrame
+  /** A query's first error, or its median seconds and last rep's metrics. */
+  type Outcome = Either[String, (Double, Metrics)]
 
   def drive(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
@@ -107,7 +109,7 @@ object Bench {
     * last rep's listener metrics.
     */
   def measure(spark: SparkSession, sfDir: String, reps: Int,
-      queries: Seq[(String, Query)]): Seq[(String, Either[String, (Double, Metrics)])] = {
+      queries: Seq[(String, Query)]): Seq[(String, Outcome)] = {
     val sc = spark.sparkContext
     val acc = counters(sc)
     queries.map { case (name, fn) =>
@@ -141,8 +143,8 @@ object Bench {
   }
 
   /** The full JSON line: per-query medians, errors, listener metrics. */
-  def fullJson(results: Seq[(String, Either[String, (Double, Metrics)])],
-      sfDir: String, reps: Int, loadBefore: String, loadAfter: String): String = {
+  def fullJson(results: Seq[(String, Outcome)], sfDir: String, reps: Int,
+      loadBefore: String, loadAfter: String): String = {
     def obj(kvs: Seq[(String, String)]) =
       kvs.map { case (k, v) => Json.str(k) + ":" + v }.mkString("{", ",", "}")
     val ok = results.collect { case (k, Right((t, m))) => (k, t, m) }

@@ -9,13 +9,14 @@ class BenchSpec extends SparkSpec {
       "boom" -> ((_, _) => throw new IllegalStateException("boom")),
       "range_agg" -> ((s, _) => s.range(1000).selectExpr("id % 7 AS k").groupBy("k").count()))
     val results = Bench.measure(spark, "unused", 2, queries)
-    results.toMap.apply("range_agg") match {
+    val byName = results.toMap
+    byName("range_agg") match {
       case Right((sec, m)) =>
         assert(sec > 0)
         assert(m.jobs >= 1 && m.stages >= 1 && m.tasks >= 1, m)
       case Left(err) => fail(err)
     }
-    assert(results.toMap.apply("boom") == Left("IllegalStateException: boom"))
+    assert(byName("boom") == Left("IllegalStateException: boom"))
 
     val json = Bench.fullJson(results, "unused", 2, "", "")
     val (timings, rest) = json.splitAt(json.indexOf(""""errors":"""))
